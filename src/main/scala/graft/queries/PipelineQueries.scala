@@ -259,9 +259,9 @@ object PipelineQueries {
   }
 
   /** The q47 invariant battery over any envelope scan relation —
-    * shared by q47 (generated fixture store) and q207 (block-indexed
-    * sorted-run store), so the two stores are held to the SAME oracle
-    * constants. */
+    * shared by q47 (generated fixture store) and the HFile-store
+    * queries (q210, q243, q247), so every store is held to the SAME
+    * oracle constants. */
   private def multiversionContract(raw: DataFrame, s: SparkSession): DataFrame = {
     val out = ExportPipeline.run(raw, Fixture.Topic, Fixture.keyService)
     val recs = ExportPipeline.records(out)
@@ -287,31 +287,6 @@ object PipelineQueries {
       |CAST(10000 AS BIGINT) AS n_ts_match,
       |CAST(10000 AS BIGINT) AS n_mts_match""".stripMargin
 
-  // --------------------------------------- q207 sorted-run store swap
-  /** q47's multi-version export contract with the store SWAPPED: the
-    * scan reads a block-indexed sorted-run snapshot on disk through
-    * [[graft.sources.SortedRunStore]] — manifest resolve, block-index
-    * seek, heap-merge of region generations with the pushed ts range
-    * applied at the block decoder, stop-at-slice-end (the exercised
-    * form of the HFile-snapshot plan, EnvelopeStore.scala; reference
-    * scan semantics HBaseReader.kt:145-150). The snapshot holds the
-    * SAME corpus (key i: 1 + i%5 versions at ts 1000+v, versions split
-    * across 2 generation files per region), so every golden constant
-    * of q47 must hold verbatim — overwritten versions never leak out
-    * of the merge, out-of-range newer versions lose at the decoder. */
-  def q207SortedRunExport(s: SparkSession, dir: String): DataFrame = {
-    val snap = graft.sources.SortedRunFixture.snapshotDir(
-      N, versions = 5, regions = 4, gens = 2)
-    val raw = s.read.format("graft.sources.EnvelopeSource")
-      .option("store", "sortedrun").option("path", snap)
-      .option("scanWidth", 64)
-      .load()
-      .filter(col("ts") >= 1000L && col("ts") < 1003L)
-    multiversionContract(raw, s)
-  }
-
-  val q207Sql: String = q47Sql
-
   // ------------------------------------- q210 HBase HFile v2 store
   /** q47's multi-version export contract with the scan reading the
     * HBase HFile v2 BYTE FORMAT itself ([[graft.sources
@@ -321,7 +296,8 @@ object PipelineQueries {
     * files with the pushed ts range applied at the decoder — the
     * production snapshot-scan layer for the reference's table
     * (HBaseReader.kt:145-187 reads the same cells over RPC). Same
-    * corpus, so every golden constant of q47 must hold verbatim. */
+    * corpus, so every golden constant of q47 must hold verbatim. The
+    * historical q207 key runs this same query. */
   def q210HfileStore(s: SparkSession, dir: String): DataFrame = {
     val snap = graft.sources.HFileFixture.snapshotDir(
       N, versions = 5, regions = 4, gens = 2)
@@ -701,28 +677,29 @@ object PipelineQueries {
     outRow
   }
 
-  // ------------------------------ q209 sorted-run scan → sink golden
-  /** The block-indexed sorted-run store feeding the FULL export path,
-    * scan to sink: the q207 snapshot (key i: 1 + i%5 versions split
-    * across 2 generation files per region) is scanned through the DSv2
-    * source with the ts range pushed to the block decoder, run through
-    * parse → decrypt → validate → sanitise, and written by the
-    * byte-rolling encrypted [[graft.pipeline.SnapshotWriter]] with
-    * paired manifests — the complete reference job
-    * (HBaseReader.kt:145-187 → S3StreamingWriter.kt:73-187) with the
-    * scan side swapped for the on-disk sorted-run format. Goldens:
-    * every record written exactly once across the four scanWidth=64
-    * slices, every file decrypt+decompress round-trips, the exported
-    * version content survives the sink byte-for-byte (6,000 "v":2
-    * docs — the multi-version merge result, not just row counts), and
-    * every manifest line-count matches its batch. */
-  def q209SortedRunWriter(s: SparkSession, dir: String): DataFrame = {
+  // ------------------------------- q209 HFile snapshot scan → sink golden
+  /** The HFile snapshot store feeding the FULL export path, scan to
+    * sink: q210's snapshot (key i: 1 + i%5 versions split across 2
+    * generation files per region, written once per JVM) is scanned
+    * through the DSv2 source with the ts range pushed to the block
+    * decoder, run through parse → decrypt → validate → sanitise, and
+    * written by the byte-rolling encrypted
+    * [[graft.pipeline.SnapshotWriter]] with paired manifests — the
+    * complete reference job (HBaseReader.kt:145-187 →
+    * S3StreamingWriter.kt:73-187) with the scan side reading the
+    * on-disk HFile snapshot. Goldens: every record written exactly
+    * once across the four scanWidth=64 slices, every file
+    * decrypt+decompress round-trips, the exported version content
+    * survives the sink byte-for-byte (6,000 "v":2 docs — the
+    * multi-version merge result, not just row counts), and every
+    * manifest line-count matches its batch. */
+  def q209HfileWriter(s: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.SnapshotWriter
     val ks = Fixture.keyService
-    val snap = graft.sources.SortedRunFixture.snapshotDir(
+    val snap = graft.sources.HFileFixture.snapshotDir(
       N, versions = 5, regions = 4, gens = 2)
     val raw = s.read.format("graft.sources.EnvelopeSource")
-      .option("store", "sortedrun").option("path", snap)
+      .option("store", "hfile").option("path", snap)
       .option("scanWidth", 64)
       .load()
       .filter(col("ts") >= 1000L && col("ts") < 1003L)
@@ -1255,9 +1232,10 @@ object PipelineQueries {
     "q49_business_audit" -> (q49BusinessAudit _),
     "q50_equality_export" -> (q50EqualityExport _),
     "q56_streaming_export" -> (q56StreamingParity _),
-    "q207_sortedrun_export" -> (q207SortedRunExport _),
+    // q207/q209 key names are historical: both now read the HFile store
+    "q207_sortedrun_export" -> (q210HfileStore _),
     "q208_incremental_tiling" -> (q208IncrementalTiling _),
-    "q209_sortedrun_writer" -> (q209SortedRunWriter _),
+    "q209_sortedrun_writer" -> (q209HfileWriter _),
     "q210_hfile_store" -> (q210HfileStore _),
     "q243_hfile_v3_store" -> (q243HfileV3Store _),
     "q247_hfile_compaction" -> (q247HfileCompaction _),
@@ -1276,7 +1254,7 @@ object PipelineQueries {
     "q49_business_audit" -> q49Sql,
     "q50_equality_export" -> q50Sql,
     "q56_streaming_export" -> q56Sql,
-    "q207_sortedrun_export" -> q207Sql,
+    "q207_sortedrun_export" -> q210Sql,
     "q208_incremental_tiling" -> q208Sql,
     "q209_sortedrun_writer" -> q209Sql,
     "q210_hfile_store" -> q210Sql,

@@ -196,22 +196,21 @@ private[sources] class EnvelopeScan(n: Long, scanWidth: Int,
 
   /** One input partition per signed-byte key-range slice
     * (HBasePartitioner analogue). The store rides in the partition —
-    * `store=sortedrun` swaps the generated fixture for the
-    * block-indexed [[SortedRunStore]] snapshot scan, and `store=hfile`
-    * for the [[HFileSnapshotStore]] reading the HBase HFile v2 format
+    * `store=hfile` swaps the generated fixture for the
+    * [[HFileSnapshotStore]] reading the HBase HFile v2/v3 format
     * itself; a production snapshot deployment is that same one-line
-    * swap. */
+    * swap. An unknown store fails the scan: a typo must never export
+    * the generated fixture as if it were the snapshot. */
   private[sources] def mkStore(): EnvelopeStore = storeKind match {
-    case "sortedrun" =>
-      require(path.nonEmpty, "store=sortedrun requires a path option")
-      SortedRunStore(path)
+    case "fixture" => FixtureEnvelopeStore(n, corrupt, tsSpread, versions)
     case "hfile" =>
       require(path.nonEmpty, "store=hfile requires a path option")
       HFileSnapshotStore(path)
     case "flaky" => // fault-injection seam for the task-retry spec
       FlakyEnvelopeStore(
         FixtureEnvelopeStore(n, corrupt, tsSpread, versions), failAfter)
-    case _ => FixtureEnvelopeStore(n, corrupt, tsSpread, versions)
+    case other => throw new IllegalArgumentException(
+      s"unknown store '$other': expected one of fixture, hfile, flaky")
   }
 
   override def planInputPartitions(): Array[InputPartition] = {

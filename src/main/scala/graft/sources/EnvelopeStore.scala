@@ -53,9 +53,8 @@ object VersionSelect {
   * slice planning, column pruning, the `InternalRow` adapter) is
   * store-independent; a store only answers "stream the cells of one
   * key slice under one ts range". [[FixtureEnvelopeStore]] streams the
-  * deterministic fixture; [[SortedRunStore]] and [[HFileSnapshotStore]]
-  * scan block-indexed snapshot files on disk (the latter the HBase
-  * HFile v2 format itself).
+  * deterministic fixture; [[HFileSnapshotStore]] scans the HBase
+  * HFile v2/v3 snapshot files on disk.
   *
   * Partial-progress / retry contract (the reference's resume-at-key,
   * HBaseReader.kt:62-90, translated to Spark's execution model): the
@@ -75,11 +74,10 @@ trait EnvelopeStore extends Serializable {
   /** The slice index (of `width`-wide bands) that THIS store's `scan`
     * reads as owning `row` — slice-band conventions differ by store
     * ([[FixtureEnvelopeStore]] maps slice i to the SIGNED first-byte
-    * band, the snapshot stores to the UNSIGNED band), so any
+    * band, the HFile store to the UNSIGNED band), so any
     * row-targeted scan must ask the store, never assume one mapping.
-    * Default = unsigned bands (the [[SortedRunStore]] /
-    * [[HFileSnapshotStore]] layout); wrappers delegate to their inner
-    * store. */
+    * Default = unsigned bands (the [[HFileSnapshotStore]] layout);
+    * wrappers delegate to their inner store. */
   def owningSlice(row: Array[Byte], width: Int): Int = (row(0) & 0xff) / width
 
   /** Point lookups for pushed `hbase_id` predicates. The default is

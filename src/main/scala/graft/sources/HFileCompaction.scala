@@ -40,18 +40,11 @@ object HFileCompaction {
   /** Regions of a snapshot dir: file names follow
     * `region-rNNN-gM.hfile`; generation order = name order (later
     * generation = newer, the fixture/HBase-seqid convention). */
-  private[sources] def regionFiles(dir: String): Seq[(String, Seq[String])] = {
-    val names = mutable.ArrayBuffer.empty[String]
-    val it = Files.list(Paths.get(dir)).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.getFileName.toString.endsWith(".hfile")) names += p.toString
-    }
-    names.sorted.groupBy(n =>
+  private[sources] def regionFiles(dir: String): Seq[(String, Seq[String])] =
+    HFileSnapshotStore.hfilesIn(dir).groupBy(n =>
       Paths.get(n).getFileName.toString.split("-g").head)
       .toSeq.map { case (r, fs) => r -> fs.toSeq.sorted }
       .sortBy(_._1)
-  }
 
   /** Compacts `dir` into a fresh directory (memoised per (dir, shape,
     * dropDeletes) per JVM); returns the compacted directory path. */

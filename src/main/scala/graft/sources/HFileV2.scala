@@ -1034,8 +1034,7 @@ object HFileV2Format {
   private[sources] val opens = new java.util.concurrent.atomic.AtomicInteger
 
   /** Trailer + root index + pruning keys + cell-trailer flags, read
-    * once per JVM per file (the block-cache / broadcast analogue —
-    * same policy as [[SortedRunFormat.readBlockIndex]]). */
+    * once per JVM per file (the block-cache / broadcast analogue). */
   def readMeta(path: String): HFileMeta =
     metaMemo.computeIfAbsent(path, { p =>
       val raf = new RandomAccessFile(p, "r")
@@ -1445,13 +1444,12 @@ final case class HFileCell(row: Array[Byte], ts: Long, value: Array[Byte],
     typ: Byte = HFileV2Format.KeyTypePut,
     qualifier: Array[Byte] = HFileV2Format.Qualifier)
 
-/** Writes HFile v2/v3 files. FIXTURE/TEST seam with the same role as
-  * [[SortedRunWriter]]: production never writes HFiles (HBase does);
-  * this writer exists so the READER — the production-relevant half —
-  * is exercised against files laid out exactly per the published
-  * format, including compression, checksums, block encoding,
-  * single- and multi-level indexes, both trailer versions and both
-  * FileInfo serializations. */
+/** Writes HFile v2/v3 files. FIXTURE/TEST seam: production never
+  * writes HFiles (HBase does); this writer exists so the READER — the
+  * production-relevant half — is exercised against files laid out
+  * exactly per the published format, including compression,
+  * checksums, block encoding, single- and multi-level indexes, both
+  * trailer versions and both FileInfo serializations. */
 object HFileV2Writer {
 
   import HFileV2Format._
@@ -1741,13 +1739,7 @@ final case class HFileSnapshotStore(dir: String,
   override def scan(slice: KeySlice, ts: TsRange): Iterator[EnvelopeCell] = {
     val lo = slice.index * slice.width
     val hi = (slice.index + 1) * slice.width
-    val files = Files.list(Paths.get(dir)).iterator()
-    val names = mutable.ArrayBuffer.empty[String]
-    while (files.hasNext) {
-      val p = files.next()
-      if (p.getFileName.toString.endsWith(".hfile")) names += p.toString
-    }
-    val pruned = names.sorted.zipWithIndex.filter { case (p, _) =>
+    val pruned = HFileSnapshotStore.hfilesIn(dir).zipWithIndex.filter { case (p, _) =>
       val m = readMeta(p)
       val firstB = m.firstRow(0) & 0xff
       val lastB = m.lastRow.map(r => r(0) & 0xff)
@@ -1847,10 +1839,7 @@ final case class HFileSnapshotStore(dir: String,
     * blocks well inside the cap. */
   def multiGet(rows: Seq[Array[Byte]], ts: TsRange,
       useBloom: Boolean = true): HFileProbeReport = {
-    import scala.jdk.CollectionConverters._
-    val paths = Files.list(Paths.get(dir)).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".hfile")).toSeq.sorted
-    val metas = paths.zipWithIndex.map { case (p, ord) =>
+    val metas = HFileSnapshotStore.hfilesIn(dir).zipWithIndex.map { case (p, ord) =>
       val m = readMeta(p)
       (p, m, m.maxSeqId.getOrElse(ord.toLong))
     }
@@ -1989,6 +1978,22 @@ final case class HFileProbeReport(found: Seq[EnvelopeCell], rowsProbed: Int,
 object HFileSnapshotStore {
   import HFileV2Format._
 
+  /** The snapshot dir's `.hfile` paths in name order. The directory
+    * stream is closed before returning: every scan and probe lists
+    * the dir, and an unclosed listing holds a descriptor until GC. */
+  private[sources] def hfilesIn(dir: String): Seq[String] = {
+    val st = Files.list(Paths.get(dir))
+    try {
+      val it = st.iterator()
+      val names = mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val p = it.next().toString
+        if (p.endsWith(".hfile")) names += p
+      }
+      names.sorted.toSeq
+    } finally st.close()
+  }
+
   /** LRU caps of [[HFileSnapshotStore.multiGet]]'s per-call caches —
     * the probe path's memory contract: at most this many decoded data
     * blocks / bloom chunk bit arrays resident, regardless of probe
@@ -2049,9 +2054,9 @@ private[sources] final case class HFileEntry(key: Array[Byte], ts: Long,
   * FAST_DIFF), skips pre-slice rows, drops out-of-ts-range cells, and
   * ends at the slice stop byte. Survives one (injected or real)
   * IOException per `reopensLeft` by reopening the file and reseeking
-  * to strictly past the last entry it returned — the same
-  * within-attempt reopen-at-key contract [[RunScanner]] implements
-  * (the reference's resume-at-key, HBaseReader.kt:62-90). */
+  * to strictly past the last entry it returned — the within-attempt
+  * reopen-at-key contract of [[EnvelopeStore]] (the reference's
+  * resume-at-key, HBaseReader.kt:62-90). */
 private[sources] final class HFileScanner(path: String, loByte: Int,
     hiByte: Int, range: TsRange, val seqId: Long,
     failAfter: Option[Int] = None)
@@ -2177,13 +2182,12 @@ private[sources] final class HFileScanner(path: String, loByte: Int,
   }
 }
 
-/** Deterministic HFile-snapshot fixtures over the SAME corpus the
-  * other stores generate — region r of `regions` holds first-row-byte
-  * range [r·256/regions, (r+1)·256/regions), a key's versions spread
-  * across the region's `gens` generation files (single-version corpora
-  * spread keys instead), so a scan must both prune files by slice AND
-  * heap-merge overlapping generations, exactly like
-  * [[SortedRunFixture]]. */
+/** Deterministic HFile-snapshot fixtures over the SAME corpus
+  * [[FixtureEnvelopeStore]] generates — region r of `regions` holds
+  * first-row-byte range [r·256/regions, (r+1)·256/regions), a key's
+  * versions spread across the region's `gens` generation files
+  * (single-version corpora spread keys instead), so a scan must both
+  * prune files by slice AND heap-merge overlapping generations. */
 object HFileFixture {
 
   private val snapshotMemo =

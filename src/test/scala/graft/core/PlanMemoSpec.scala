@@ -173,7 +173,7 @@ class PlanMemoSpec extends SparkSuite {
     // The end-to-end value-parity canary: one relational join, one
     // windowed rank, one dedup-family query, each executed BOTH ways —
     // through SparkEntry's memo wrapper (second call = served from the
-    // cached analyzed plan) and through the module's RAW function
+    // cached optimized plan) and through the module's RAW function
     // (never wrapped, full construction) — with identical collected
     // results required. Reference-equality of the served logical plan
     // across two wrapped calls witnesses that the hit path actually

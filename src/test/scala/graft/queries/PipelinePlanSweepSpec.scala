@@ -54,7 +54,7 @@ class PipelinePlanSweepSpec extends SparkSuite {
     * filter-vs-survivor cardinality trade pinned and accepted at
     * q23/q148 in SingleEvaluationPinSpec, bounded at 2× of one stage.
     *
-    * THE VERSION PROJECT (`regexp_extract` × 5): the HFile/sorted-run
+    * THE VERSION PROJECT (`regexp_extract` × 5): the HFile-store
     * export summaries extract the record version from the raw cell
     * value 5× within one Project — deduped by the same ProjectExec
     * subexpression elimination; bounded and cold (runs once per

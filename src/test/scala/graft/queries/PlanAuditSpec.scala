@@ -200,7 +200,7 @@ class PlanAuditSpec extends SparkSuite {
       "q35_phash_neardup" -> 2,
       "q91_stream_state" -> 2,
       "q126_stream_static" -> 2,
-      // q207's report is one global agg over the sorted-run export
+      // q207's report is one global agg over the HFile-store export
       // pipeline (partial agg → single-partition exchange); q208's
       // report is a LOCAL relation — its three window pipelines and
       // reconciliation joins execute eagerly inside the query (each
@@ -209,7 +209,7 @@ class PlanAuditSpec extends SparkSuite {
       "q207_sortedrun_export" -> 1,
       "q208_incremental_tiling" -> 0,
       // q209 collects writer accounting inside the query (local
-      // report); q210 is q207's shape over the HFile v2 store
+      // report); q210 is the query the historical q207 key runs
       "q209_sortedrun_writer" -> 0,
       "q210_hfile_store" -> 1,
       // round-9 additions that cleared 0.5 s at sf0.1: q225's count

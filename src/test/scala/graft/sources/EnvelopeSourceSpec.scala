@@ -108,6 +108,18 @@ class EnvelopeSourceSpec extends SparkSuite {
       "probe must return exactly the present rows' scan winners")
   }
 
+  test("an unknown store fails the scan instead of exporting the fixture") {
+    // the retired sorted-run value and a typo of "hfile" alike: neither
+    // may fall back to the generated corpus and report success
+    for (store <- Seq("sortedrun", "hfil")) {
+      val ex = intercept[IllegalArgumentException] {
+        read("n" -> "100", "store" -> store, "path" -> "/nonexistent").count()
+      }
+      assert(ex.getMessage.contains(s"unknown store '$store'"))
+      assert(ex.getMessage.contains("fixture, hfile, flaky"))
+    }
+  }
+
   test("streaming scans leave hbase_id predicates to Spark (no false pushdown)") {
     // the micro-batch stream plans slice partitions; a row predicate
     // accepted there would silently drop rows — it must be REJECTED at

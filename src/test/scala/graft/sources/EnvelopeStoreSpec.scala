@@ -7,26 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Unit spec for the store seam extracted from the DSv2 source:
   * KeySlice byte bounds (the HBasePartitioner contract), VersionSelect
   * winner arithmetic (Scan.setTimeRange + one-version semantics), and
-  * the SAME slice/ts/version contract run against BOTH stores — the
-  * generated [[FixtureEnvelopeStore]] and the block-indexed
-  * [[SortedRunStore]] (the exercised form of the HFile-snapshot scan
-  * plan) — plus the sorted-run-only behaviors: manifest pruning,
-  * block-index seek, and the reopen-at-key retry under injected
-  * faults. */
+  * the SAME slice/ts/version contract run against every store — the
+  * generated [[FixtureEnvelopeStore]] and the [[HFileSnapshotStore]]
+  * in its v2 and v3 shapes — plus the HFile-only behaviors: trailer
+  * and checksum validation, slice pruning, block-index seek, the
+  * reopen-at-key retry under injected faults, point gets, blooms,
+  * tombstones and compaction. */
 class EnvelopeStoreSpec extends AnyFunSuite {
 
   private val t0 = graft.pipeline.Fixture.CellTimestamp
-
-  /** Builds a sorted-run snapshot with the given fixture shape in a
-    * fresh temp dir (tiny blocks so every scan crosses many blocks
-    * and the seek path is exercised). */
-  private def sortedRunStore(n: Long, tsSpread: Long, versions: Int,
-      regions: Int = 4, gens: Int = 2): SortedRunStore = {
-    val dir = Files.createTempDirectory("graft-srs-spec")
-    SortedRunFixture.writeSnapshot(dir, n, versions, regions, gens,
-      tsSpread, blockEntries = 16)
-    SortedRunStore(dir.toString)
-  }
 
   /** The store contract, identical for every implementation. */
   private def storeContract(name: String,
@@ -97,8 +86,6 @@ class EnvelopeStoreSpec extends AnyFunSuite {
 
   storeContract("fixture store",
     (n, spread, vs) => FixtureEnvelopeStore(n, corrupt = false, spread, vs))
-  storeContract("sorted-run store",
-    (n, spread, vs) => sortedRunStore(n, spread, vs))
   storeContract("hfile store",
     (n, spread, vs) => hfileStore(n, spread, vs))
   storeContract("hfile v3 fastdiff multilevel store",
@@ -126,83 +113,6 @@ class EnvelopeStoreSpec extends AnyFunSuite {
     assert(latestIn(3L, 1000L, TsRange(0L, 999L)) === None)
     // exact single-point range on the base version
     assert(latestIn(1L, 1000L, TsRange(1000L, 1000L)) === Some(0L))
-  }
-
-  test("sorted-run cells are byte-identical to the fixture store's") {
-    val fix = FixtureEnvelopeStore(200L, corrupt = false, 0L, 5)
-    val srs = sortedRunStore(200L, 0L, 5)
-    def dump(s: EnvelopeStore, range: TsRange) =
-      (0 until 256 / 16).flatMap(i => s.scan(KeySlice(i, 16), range).toSeq)
-        .map(c => (c.hbaseId.toSeq, c.ts, c.value)).sortBy(_._1.toString)
-    assert(dump(srs, TsRange.All) === dump(fix, TsRange.All))
-    // the reference's core read shape: range caps mid-version-stack
-    val capped = TsRange(0L, t0 + 2L)
-    assert(dump(srs, capped) === dump(fix, capped))
-    assert(dump(srs, capped).nonEmpty)
-  }
-
-  test("manifest resolve prunes runs: a slice opens only its region's files") {
-    // 4 regions × 2 gens; a width-8 slice lies inside ONE region →
-    // at most 2 file opens (one per generation of that region)
-    val dir = Files.createTempDirectory("graft-srs-prune")
-    SortedRunFixture.writeSnapshot(dir, 512L, 3, regions = 4, gens = 2,
-      blockEntries = 16)
-    val store = SortedRunStore(dir.toString)
-    SortedRunFormat.readManifest(dir.toString) // warm the memo
-    val before = SortedRunFormat.opens.get()
-    val cells = store.scan(KeySlice(3, 8), TsRange.All).toSeq
-    val opened = SortedRunFormat.opens.get() - before
-    assert(opened <= 2, s"slice scan opened $opened files, expected <= 2")
-    assert(cells.nonEmpty)
-    // and a full sweep still sees every key exactly once
-    val all = (0 until 256 / 8).flatMap(i =>
-      store.scan(KeySlice(i, 8), TsRange.All).toSeq)
-    assert(all.size === 512)
-  }
-
-  test("block-index binary seek lands on the right block") {
-    import SortedRunFormat.{seekBlock, BlockRef}
-    val idx = Array(
-      BlockRef(0L, Array[Byte](10)),
-      BlockRef(100L, Array[Byte](20)),
-      BlockRef(200L, Array[Byte](30)))
-    assert(seekBlock(idx, Array[Byte](5)) === 0) // before first block
-    assert(seekBlock(idx, Array[Byte](10)) === 0)
-    assert(seekBlock(idx, Array[Byte](15)) === 0)
-    assert(seekBlock(idx, Array[Byte](20)) === 1)
-    assert(seekBlock(idx, Array[Byte](25)) === 1)
-    assert(seekBlock(idx, Array[Byte](99)) === 2)
-    // unsigned compare: 0x80 sorts ABOVE 0x30, not below
-    assert(seekBlock(idx, Array[Byte](-128)) === 2)
-  }
-
-  test("reopen-at-key retry: injected mid-scan faults change nothing") {
-    val dir = Files.createTempDirectory("graft-srs-fault")
-    SortedRunFixture.writeSnapshot(dir, 300L, 4, regions = 2, gens = 2,
-      blockEntries = 16)
-    def dump(store: SortedRunStore, range: TsRange) =
-      (0 until 256 / 32).flatMap(i => store.scan(KeySlice(i, 32), range).toSeq)
-        .map(c => (c.hbaseId.toSeq, c.ts, c.value))
-    val clean = SortedRunStore(dir.toString)
-    for (failAt <- Seq(1, 7, 50); range <- Seq(TsRange.All, TsRange(0L, t0 + 1L))) {
-      val flaky = SortedRunStore(dir.toString, failAfterEntries = Some(failAt))
-      assert(dump(flaky, range) === dump(clean, range),
-        s"fault after $failAt entries must not change the scan (range $range)")
-    }
-  }
-
-  test("a corrupt trailer magic is rejected, not silently scanned") {
-    val dir = Files.createTempDirectory("graft-srs-corrupt")
-    SortedRunFixture.writeSnapshot(dir, 50L, 1, regions = 1, gens = 1,
-      blockEntries = 16)
-    val file = java.nio.file.Paths.get(dir.toString,
-      SortedRunFormat.readManifest(dir.toString).head.file)
-    val bytes = Files.readAllBytes(file)
-    bytes(bytes.length - 1) = (bytes(bytes.length - 1) ^ 0x5a).toByte
-    Files.write(file, bytes)
-    intercept[IllegalArgumentException] {
-      SortedRunFormat.readBlockIndex(file.toString)
-    }
   }
 
   // ------------------------------------------------ HFile v2 format
@@ -308,6 +218,77 @@ class EnvelopeStoreSpec extends AnyFunSuite {
       assert(dump(flaky, range) === dump(clean, range),
         s"fault after $failAt entries must not change the scan (range $range)")
     }
+  }
+
+  test("a corrupt trailer magic is rejected, not silently scanned") {
+    val dir = Files.createTempDirectory("graft-hfile-magic")
+    HFileFixture.writeSnapshot(dir, 50L, 1, regions = 1, gens = 1,
+      blockEntries = 16)
+    val file = Files.list(dir).iterator().next()
+    val bytes = Files.readAllBytes(file)
+    // the v2 trailer opens with its 8-byte magic, TrailerSize from EOF
+    val magicAt = bytes.length - HFileV2Format.TrailerSize
+    bytes(magicAt) = (bytes(magicAt) ^ 0x5a).toByte
+    Files.write(file, bytes)
+    val store = HFileSnapshotStore(dir.toString)
+    val ex = intercept[java.io.IOException] {
+      store.scan(KeySlice(0, 256), TsRange.All).toSeq
+    }
+    assert(ex.getMessage.contains("bad trailer magic"))
+  }
+
+  test("block-index binary seek lands on the right block") {
+    import HFileV2Format.{cellKey, seekBlock, RootIndexEntry}
+    val idx = Seq[Byte](10, 20, 30).zipWithIndex.map { case (row, i) =>
+      RootIndexEntry(i * 100L, 100, cellKey(Array(row), t0))
+    }.toArray
+    assert(seekBlock(idx, Array[Byte](5)) === 0) // before first block
+    assert(seekBlock(idx, Array[Byte](10)) === 0)
+    assert(seekBlock(idx, Array[Byte](15)) === 0)
+    assert(seekBlock(idx, Array[Byte](20)) === 1)
+    assert(seekBlock(idx, Array[Byte](25)) === 1)
+    assert(seekBlock(idx, Array[Byte](99)) === 2)
+    // unsigned compare: 0x80 sorts ABOVE 0x30, not below
+    assert(seekBlock(idx, Array[Byte](-128)) === 2)
+  }
+
+  test("run seek survives a key whose versions span block boundaries") {
+    // one key with 10 versions, 3-cell blocks: the key's cells
+    // straddle 4 blocks, so both the resume-at-key path (fault mid-key
+    // re-seeks to the key) and the point probe must start at the
+    // strictly-before block or silently lose the higher-ts versions
+    val dir = Files.createTempDirectory("graft-hfile-span")
+    val key = Array[Byte](10, 1)
+    val after = Array[Byte](10, 2)
+    val cells = (0 until 10).map(v =>
+      (key, 1009L - v, s"v${9 - v}".getBytes("UTF-8"))) :+
+      ((after, 1000L, "tail".getBytes("UTF-8")))
+    val file = dir.resolve("region-r000-g000.hfile")
+    HFileV2Writer.writeHFile(file, cells.iterator, HFileShape(blockEntries = 3))
+    def scanned(store: HFileSnapshotStore) =
+      store.scan(KeySlice(0, 256), TsRange.All).toSeq
+        .map(c => (c.hbaseId.toSeq, c.ts, c.value))
+    // every cell the file scanner returns, in file order: a mid-key
+    // reopen must resume strictly after the last returned cell — the
+    // store-level merge keeps only the newest version, so it alone
+    // could not see versions lost to a late resume block
+    def fileCells(failAfter: Option[Int]) =
+      new HFileScanner(file.toString, 0, 256, TsRange.All, 0L, failAfter)
+        .map(e => (e.key.toSeq, e.ts)).toSeq
+    val clean = scanned(HFileSnapshotStore(dir.toString))
+    assert(clean === Seq((key.toSeq, 1009L, "v9"), (after.toSeq, 1000L, "tail")))
+    val cleanCells = fileCells(None)
+    assert(cleanCells.size === cells.size)
+    for (failAt <- 1 to cells.size) {
+      assert(scanned(HFileSnapshotStore(dir.toString,
+        failAfterEntries = Some(failAt))) === clean, s"failAfter=$failAt")
+      assert(fileCells(Some(failAt)) === cleanCells, s"cells, failAfter=$failAt")
+    }
+    // point probe with a ts cap must find the capped winner even
+    // though it lives mid-span
+    val capped = HFileSnapshotStore(dir.toString)
+      .get(Seq(key), TsRange(0L, 1005L)).toSeq
+    assert(capped.map(c => (c.ts, c.value)) === Seq((1005L, "v5")))
   }
 
   // ------------------------------------ HFile v3 / FAST_DIFF / multilevel
@@ -669,56 +650,6 @@ class EnvelopeStoreSpec extends AnyFunSuite {
       assert(dump(after2, range) === dump(before, range), s"carry $range")
   }
 
-  test("sorted-run point gets match the scan winners, ts range pushed") {
-    val store = sortedRunStore(400L, 0L, 5)
-    for (range <- Seq(TsRange.All, TsRange(0L, t0 + 1L))) {
-      val all = (0 until 256 / 8).flatMap(i =>
-        store.scan(KeySlice(i, 8), range).toSeq)
-      val expected = all.map(c => c.hbaseId.toSeq -> ((c.ts, c.value))).toMap
-      val probeRows = all.map(_.hbaseId).take(25)
-      val absent = probeRows.take(5).map { r =>
-        val x = r.clone(); x(x.length - 1) = (x(x.length - 1) ^ 0x5a).toByte; x
-      }
-      val got = store.get(probeRows ++ absent, range).toSeq
-      assert(got.size === probeRows.size, s"range $range")
-      got.foreach(c =>
-        assert(expected(c.hbaseId.toSeq) === ((c.ts, c.value)), s"range $range"))
-    }
-  }
-
-  test("run seek survives a key whose versions span block boundaries") {
-    // one key with 10 versions, 3-entry blocks: the key's entries
-    // straddle 4 blocks, so both the resume-at-key path (fault mid-key
-    // re-seeks to the key) and the point probe must start at the
-    // strictly-before block or silently lose the higher-ts versions
-    val dir = Files.createTempDirectory("graft-srs-span")
-    val key = Array[Byte](10, 1)
-    val after = Array[Byte](10, 2)
-    val entries = (0 until 10).map(v => (key, 1009L - v, s"v${9 - v}")) :+
-      ((after, 1000L, "tail"))
-    val meta = SortedRunWriter.writeRun(dir, "run-000.dat", entries.iterator,
-      blockEntries = 3)
-    SortedRunFormat.writeManifest(dir, Seq(meta))
-    // clean scan == every fault-injection offset's scan (store-level
-    // merge keeps the newest version; the scanner must still DECODE
-    // every version to find it after a mid-key reopen)
-    val clean = SortedRunStore(dir.toString)
-      .scan(KeySlice(0, 256), TsRange.All).toSeq
-      .map(c => (c.hbaseId.toSeq, c.ts, c.value))
-    assert(clean === Seq((key.toSeq, 1009L, "v9"), (after.toSeq, 1000L, "tail")))
-    for (failAt <- 2 to 10) {
-      val faulty = SortedRunStore(dir.toString, failAfterEntries = Some(failAt))
-        .scan(KeySlice(0, 256), TsRange.All).toSeq
-        .map(c => (c.hbaseId.toSeq, c.ts, c.value))
-      assert(faulty === clean, s"failAfter=$failAt")
-    }
-    // point probe with a ts cap must find the capped winner even
-    // though it lives mid-span
-    val capped = SortedRunStore(dir.toString)
-      .get(Seq(key), TsRange(0L, 1005L)).toSeq
-    assert(capped.map(c => (c.ts, c.value)) === Seq((1005L, "v5")))
-  }
-
   // ------------------------------------------------------------ bloom
 
   test("row bloom: meta payload round-trips the compound v3 layout") {
@@ -855,7 +786,7 @@ class EnvelopeStoreSpec extends AnyFunSuite {
 
   test("default get scans only the owning bands under each store's own slice convention") {
     // the trait fallback routes through owningSlice — per-store band
-    // conventions (fixture SIGNED, snapshot stores UNSIGNED) must not
+    // conventions (fixture SIGNED, HFile store UNSIGNED) must not
     // leak: rows on both sides of the signed-byte boundary probe
     // correctly, and absent rows yield nothing
     val store = FixtureEnvelopeStore(512L, corrupt = false,

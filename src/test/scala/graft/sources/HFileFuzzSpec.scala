@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * tags × bloom chunking, including the degenerate one-cell-per-block
   * and deep multi-level-index corners) and random corpora (multi-
   * version rows, all four delete scopes, generation overlap with
-  * sequence-id ties) — the slice scan, the bloom point-probe, and a
-  * snapshot-export compaction must all agree with an in-memory model
-  * built from the SAME cells. The round-12 strict-floor seek bug
+  * sequence-id ties) — the slice scan, the bloom point-probe, the
+  * slice scan under an injected IOException at every cell offset
+  * (reopen-at-key), and a snapshot-export compaction must all agree
+  * with an in-memory model built from the SAME cells. The round-12 strict-floor seek bug
   * lived exactly in this space (a row's versions spanning a block
   * boundary under a targeted descent); this spec sweeps that corner
   * class systematically instead of one fixture at a time.
@@ -50,9 +51,9 @@ class HFileFuzzSpec extends AnyFunSuite {
         row -> ((w.ts, new String(w.value, java.nio.charset.StandardCharsets.UTF_8))))
     }
 
-  private def scanAll(store: HFileSnapshotStore, range: TsRange)
-      : Map[Seq[Byte], (Long, String)] =
-    (0 until 256 / 8).flatMap(i => store.scan(KeySlice(i, 8), range).toSeq)
+  private def scanAll(store: HFileSnapshotStore, range: TsRange,
+      width: Int = 8): Map[Seq[Byte], (Long, String)] =
+    (0 until 256 / width).flatMap(i => store.scan(KeySlice(i, width), range).toSeq)
       .map(c => c.hbaseId.toSeq -> ((c.ts, c.value))).toMap
 
   test("random shapes and corpora: scan, probe, and compaction match the model") {
@@ -135,6 +136,21 @@ class HFileFuzzSpec extends AnyFunSuite {
         assert(ctl.found.map(c => (c.hbaseId.toSeq, c.ts, c.value)) ===
           rep.found.map(c => (c.hbaseId.toSeq, c.ts, c.value)),
           s"$ctx probe control arm")
+      }
+
+      // reopen-at-key: an injected IOException after EVERY cell offset
+      // of the largest file must leave the scan equal to the model —
+      // full-width scans reach every offset, 8-wide slices fault
+      // right after their seek
+      val maxCells = gens.map(_._2.size).max
+      for (failAt <- 1 to maxCells; range <- ranges) {
+        val faulty = HFileSnapshotStore(dir.toString,
+          failAfterEntries = Some(failAt))
+        val expected = modelWinners(allCells, range)
+        assert(scanAll(faulty, range, width = 256) === expected,
+          s"$ctx full-width failAt $failAt range $range")
+        assert(scanAll(faulty, range) === expected,
+          s"$ctx sliced failAt $failAt range $range")
       }
 
       // snapshot-export compaction (markers carried) into ANOTHER
